@@ -20,14 +20,29 @@ and pinned by the reference spec files re-encoded as pytest goldens
 
 These functions run row-at-a-time *inside* Arrow-batched pandas UDFs
 (receipt_scanner_spark/functions/udfs.py); they are deliberately
-regex-only and allocation-light.
+regex-only and allocation-light.  The scans find exactly the matches
+of the reference's flat regexes, in fewer sre steps, by these
+invariants (outputs pinned by tests/test_parser_golden.py):
+
+* the ISO codes are distinct 3-letter literals, so their alternation
+  is a prefix trie with the same match set; a lookahead (three
+  letters, then a digit or the decimal mark) rejects other words
+  before the trie;
+* every ``prepare_text`` strip starts at a literal ``(``, so a text
+  without one is returned as is (and both profiles then share it);
+* a TOTAL_PREPEND match starts at the JS-whitespace char before a
+  ``Total``/``Balance Due`` keyword, or at 0, so that pattern is only
+  ``match``ed there (keyword−1, or 0), in order and past the previous
+  match's end;
+* ``^`` cannot match past 0, so other scans ``match`` at 0 and then run
+  a twin led by the whitespace class alone (``jsws.WsLed``).
 """
 
 from __future__ import annotations
 
 import math
 import re
-from typing import NamedTuple
+from typing import Iterator, NamedTuple
 
 
 class AmountMatch(NamedTuple):
@@ -46,39 +61,54 @@ _PSC = (
     "\\uFFE1\\uFFE5\\uFFE6]"
 )
 
-# ISO-4217 alternation (amount_parser.js:140-156).
-_CURRENCY_CODES = "|".join(
-    [
-        "AED", "AFN", "ALL", "AMD", "ANG", "AOA", "ARS", "AUD",
-        "AWG", "AZN", "BAM", "BBD", "BDT", "BGN", "BHD", "BIF", "BMD",
-        "BND", "BOB", "BOV", "BRL", "BSD", "BTN", "BWP", "BYR", "BZD",
-        "CAD", "CDF", "CHE", "CHF", "CHW", "CLF", "CLP", "CNY", "COP",
-        "COU", "CRC", "CUC", "CUP", "CVE", "CZK", "DJF", "DKK", "DOP",
-        "DZD", "EGP", "ERN", "ETB", "EUR", "FJD", "FKP", "GBP", "GEL",
-        "GHS", "GIP", "GMD", "GNF", "GTQ", "GYD", "HKD", "HNL", "HRK",
-        "HTG", "HUF", "IDR", "ILS", "INR", "IQD", "IRR", "ISK", "JMD",
-        "JOD", "JPY", "KES", "KGS", "KHR", "KMF", "KPW", "KRW", "KWD",
-        "KYD", "KZT", "LAK", "LBP", "LKR", "LRD", "LSL", "LTL", "LVL",
-        "LYD", "MAD", "MDL", "MGA", "MKD", "MMK", "MNT", "MOP", "MRO",
-        "MUR", "MVR", "MWK", "MXN", "MXV", "MYR", "MZN", "NAD", "NGN",
-        "NIO", "NOK", "NPR", "NZD", "OMR", "PAB", "PEN", "PGK", "PHP",
-        "PKR", "PLN", "PYG", "QAR", "RON", "RSD", "RUB", "RWF", "SAR",
-        "SBD", "SCR", "SDG", "SEK", "SGD", "SHP", "SLL", "SOS", "SRD",
-        "SSP", "STD", "SYP", "SZL", "THB", "TJS", "TMT", "TND", "TOP",
-        "TRY", "TTD", "TWD", "TZS", "UAH", "UGX", "USD", "USN", "USS",
-        "UYI", "UYU", "UZS", "VEF", "VND", "VUV", "WST", "XAF", "XAG",
-        "XAU", "XBA", "XBB", "XBC", "XBD", "XCD", "XDR", "XFU", "XOF",
-        "XPD", "XPF", "XPT", "XTS", "XXX", "YER", "ZAR", "ZMW",
-    ]
-)
+# ISO-4217 codes (amount_parser.js:140-156).
+_ISO_CODES = [
+    "AED", "AFN", "ALL", "AMD", "ANG", "AOA", "ARS", "AUD",
+    "AWG", "AZN", "BAM", "BBD", "BDT", "BGN", "BHD", "BIF", "BMD",
+    "BND", "BOB", "BOV", "BRL", "BSD", "BTN", "BWP", "BYR", "BZD",
+    "CAD", "CDF", "CHE", "CHF", "CHW", "CLF", "CLP", "CNY", "COP",
+    "COU", "CRC", "CUC", "CUP", "CVE", "CZK", "DJF", "DKK", "DOP",
+    "DZD", "EGP", "ERN", "ETB", "EUR", "FJD", "FKP", "GBP", "GEL",
+    "GHS", "GIP", "GMD", "GNF", "GTQ", "GYD", "HKD", "HNL", "HRK",
+    "HTG", "HUF", "IDR", "ILS", "INR", "IQD", "IRR", "ISK", "JMD",
+    "JOD", "JPY", "KES", "KGS", "KHR", "KMF", "KPW", "KRW", "KWD",
+    "KYD", "KZT", "LAK", "LBP", "LKR", "LRD", "LSL", "LTL", "LVL",
+    "LYD", "MAD", "MDL", "MGA", "MKD", "MMK", "MNT", "MOP", "MRO",
+    "MUR", "MVR", "MWK", "MXN", "MXV", "MYR", "MZN", "NAD", "NGN",
+    "NIO", "NOK", "NPR", "NZD", "OMR", "PAB", "PEN", "PGK", "PHP",
+    "PKR", "PLN", "PYG", "QAR", "RON", "RSD", "RUB", "RWF", "SAR",
+    "SBD", "SCR", "SDG", "SEK", "SGD", "SHP", "SLL", "SOS", "SRD",
+    "SSP", "STD", "SYP", "SZL", "THB", "TJS", "TMT", "TND", "TOP",
+    "TRY", "TTD", "TWD", "TZS", "UAH", "UGX", "USD", "USN", "USS",
+    "UYI", "UYU", "UZS", "VEF", "VND", "VUV", "WST", "XAF", "XAG",
+    "XAU", "XBA", "XBB", "XBC", "XBD", "XCD", "XDR", "XFU", "XOF",
+    "XPD", "XPF", "XPT", "XTS", "XXX", "YER", "ZAR", "ZMW",
+]
 
-from .jsws import JS_WS as _JS_WS
+
+def _trie(words: list[str]) -> str:
+    """Alternation of distinct equal-length literals as a prefix trie:
+    ``AED|AFN|AFX|BAM`` → ``(?:A(?:ED|F[NX])|BAM)``.  Equal length and
+    distinctness mean at most one word matches at a position, so the
+    match set is the flat alternation's; sre tests one leading letter
+    per candidate position instead of trying every branch."""
+    if len(words[0]) == 1:
+        return words[0] if len(words) == 1 else "[" + "".join(words) + "]"
+    groups: dict[str, list[str]] = {}
+    for w in words:
+        groups.setdefault(w[0], []).append(w[1:])
+    return "(?:" + "|".join(h + _trie(t) for h, t in groups.items()) + ")"
+
+
+_CURRENCY_CODES = _trie(_ISO_CODES)
+
+from .jsws import JS_WS as _JS_WS, WsLed
 
 _FLOAT_PREFIX = re.compile(r"^[+-]?(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?")
 
 # Compiled-regex caches, keyed by (decimal, thousand, prepend).
-_FRACTIONAL_CACHE: dict[tuple[str, str, str], re.Pattern[str]] = {}
-_WHOLE_CACHE: dict[tuple[str, str, str], re.Pattern[str]] = {}
+_FRACTIONAL_CACHE: dict[tuple[str, str, str], WsLed] = {}
+_WHOLE_CACHE: dict[tuple[str, str, str], WsLed] = {}
 _PREPARE_CACHE: dict[tuple[str, str], re.Pattern[str]] = {}
 
 
@@ -88,15 +118,28 @@ def parse_float_js(s: str) -> float:
     return float(m.group(0)) if m else math.nan
 
 
-def _fractional_regexp(decimal: str, thousand: str, prepend: str) -> re.Pattern[str]:
+def _currency(decimal: str) -> str:
+    """Currency group: a \\p{Sc} symbol or an ISO code.  The lookahead
+    is necessary for the code branch: three letters, then the amount's
+    first char, a digit or the decimal mark.  Under IGNORECASE ``[A-Z]``
+    matches every char a code letter matches (plus U+0130, U+0131,
+    U+017F and U+212A), so a word that is no code fails after a few
+    class tests instead of entering every trie branch."""
+    return (
+        "(" + _PSC
+        + "|(?=[A-Z]{3}(?:[0-9]|" + re.escape(decimal) + "))"
+        + _CURRENCY_CODES + ")"
+    )
+
+
+def _fractional_regexp(decimal: str, thousand: str, prepend: str) -> WsLed:
     key = (decimal, thousand, prepend)
-    pat = _FRACTIONAL_CACHE.get(key)
-    if pat is None:
+    method = _FRACTIONAL_CACHE.get(key)
+    if method is None:
         d, t = re.escape(decimal), re.escape(thousand)
-        pat = re.compile(
-            rf"(?:^|[{_JS_WS}])"
-            + prepend
-            + "(" + _PSC + "|" + _CURRENCY_CODES + ")?"
+        method = WsLed.compile(
+            prepend
+            + _currency(decimal) + "?"
             # amount group: (x)x(,xxx)* | x(xxx..) | 0 | <empty>, then .d{1,2}
             + "((?:(?:[1-9][0-9]{0,2}(?:" + t + "[0-9]{3})*)"
             + "|(?:[1-9][0-9]*)"
@@ -105,26 +148,25 @@ def _fractional_regexp(decimal: str, thousand: str, prepend: str) -> re.Pattern[
             + rf"(?=$|[{_JS_WS}])",
             re.IGNORECASE,
         )
-        _FRACTIONAL_CACHE[key] = pat
-    return pat
+        _FRACTIONAL_CACHE[key] = method
+    return method
 
 
-def _whole_regexp(decimal: str, thousand: str, prepend: str) -> re.Pattern[str]:
+def _whole_regexp(decimal: str, thousand: str, prepend: str) -> WsLed:
     key = (decimal, thousand, prepend)
-    pat = _WHOLE_CACHE.get(key)
-    if pat is None:
+    method = _WHOLE_CACHE.get(key)
+    if method is None:
         t = re.escape(thousand)
-        pat = re.compile(
-            rf"(?:^|[{_JS_WS}])"
-            + prepend
-            + "(" + _PSC + "|" + _CURRENCY_CODES + ")"  # currency REQUIRED
+        method = WsLed.compile(
+            prepend
+            + _currency(decimal)  # currency REQUIRED
             + "((?:[1-9][0-9]{0,2}(?:" + t + "[0-9]{3})*)"
             + "|(?:[1-9][0-9]*))"
             + rf"(?=$|[{_JS_WS}])",
             re.IGNORECASE,
         )
-        _WHOLE_CACHE[key] = pat
-    return pat
+        _WHOLE_CACHE[key] = method
+    return method
 
 
 def prepare_text(text: str, decimal: str = ".", thousand: str = ",") -> str:
@@ -133,6 +175,8 @@ def prepare_text(text: str, decimal: str = ".", thousand: str = ",") -> str:
     Mirror of amount_parser.js:63-82 (whitespace-delimited, int part is
     1-3 digits optionally extended by thousand-separated triples, or 0).
     """
+    if "(" not in text:  # every strip starts at a literal "("
+        return text
     key = (decimal, thousand)
     pat = _PREPARE_CACHE.get(key)
     if pat is None:
@@ -164,7 +208,6 @@ def find_amounts(
     """
     decimal = decimal or "."
     thousand = thousand or ","
-    out: list[AmountMatch] = []
     # the reference re-applies prepare_text before each method pass
     # (amount_parser.js:49); it is idempotent (a strip never exposes a
     # new whitespace-delimited "(amount)" form), so one application is
@@ -173,9 +216,47 @@ def find_amounts(
     # cascade reuse an already-prepared text across sub-parsers.
     if not prepared:
         text = prepare_text(text, decimal, thousand)
+    return _scan(text, decimal, thousand, prepend, _total_starts(text, prepend))
+
+
+def _total_starts(text: str, prepend: str) -> list[int] | None:
+    """Every position a TOTAL_PREPEND pattern can match at, or None for
+    any other prepend.  Such a match starts with one JS-whitespace char
+    and then a keyword, or with the keyword itself at 0, so it starts at
+    keyword−1 or at 0.  The keyword regex folds case exactly as the full
+    pattern does (``str.lower()`` would shift offsets on text like
+    ``"İ"``), and the keywords cannot overlap, so ``finditer`` finds
+    them all."""
+    if prepend != TOTAL_PREPEND:
+        return None
+    return [max(m.start() - 1, 0) for m in _TOTAL_KEYWORD.finditer(text)]
+
+
+def _finditer_at(
+    pat: re.Pattern[str], text: str, starts: list[int]
+) -> Iterator[re.Match[str]]:
+    """``pat.finditer(text)`` when no match can begin outside ``starts``
+    (ascending): ``pat.match`` at each start at or past the previous
+    match's end, as finditer resumes there."""
+    end = 0
+    for s in starts:
+        if s >= end and (m := pat.match(text, s)):
+            yield m
+            end = m.end()
+
+
+def _scan(
+    text: str, decimal: str, thousand: str, prepend: str, starts: list[int] | None
+) -> list[AmountMatch]:
+    """Fractional then whole matches; only at ``starts`` when given."""
+    out: list[AmountMatch] = []
     for regexp_builder in (_fractional_regexp, _whole_regexp):
-        pat = regexp_builder(decimal, thousand, prepend)
-        for m in pat.finditer(text):
+        method = regexp_builder(decimal, thousand, prepend)
+        found = (
+            method.finditer(text) if starts is None
+            else _finditer_at(method.pat, text, starts)
+        )
+        for m in found:
             raw = m.group(2)
             value = parse_float_js(
                 raw.replace(thousand, "", 1).replace(decimal, ".", 1)
@@ -204,8 +285,11 @@ def all_amounts(
     profile once, not once per sub-parser."""
     us = _prepared_us if _prepared_us is not None else prepare_text(text, ".", ",")
     eu = _prepared_eu if _prepared_eu is not None else prepare_text(text, ",", ".")
-    matches = find_amounts(us, None, None, prepend, prepared=True)
-    matches_comma = find_amounts(eu, ",", ".", prepend, prepared=True)
+    starts_us = _total_starts(us, prepend)
+    # without a "(" both profiles scan the same text and share the keywords
+    starts_eu = starts_us if eu is us else _total_starts(eu, prepend)
+    matches = _scan(us, ".", ",", prepend, starts_us)
+    matches_comma = _scan(eu, ",", ".", prepend, starts_eu)
     if len(matches_comma) > len(matches):
         return matches_comma
     return matches
@@ -225,6 +309,8 @@ def extract_largest(values: list[AmountMatch]) -> str | None:
 
 
 TOTAL_PREPEND = "(?:Total(?: due)?|Balance Due)[^a-z0-9]*"
+# The keywords TOTAL_PREPEND opens with, for _total_starts.
+_TOTAL_KEYWORD = re.compile("Total|Balance Due", re.IGNORECASE)
 
 
 class _TotalParser:

@@ -43,6 +43,20 @@ the exact ECMA-262 class (parsers/jsws.py) because it has a node
 differential oracle (tools/diff_date_repair_oracle.py) — the grammar
 stays pinned by the spec goldens + tests/test_date_properties.py
 instead, and only non-ASCII-exotic-whitespace adjacency is affected.
+
+The scans find exactly the matches of the flat reference regexes, in
+fewer sre steps, by these invariants (outputs pinned by
+tests/test_parser_golden.py):
+
+* month alternations are grouped by first letter; where EN and ES
+  share a stem (Feb, Mar, May, Jun, Jul, Sep, Oct, Nov) the EN branch
+  stays first, so the winning branch is the flat alternation's; a
+  first-letter lookahead rejects other words before the branches;
+* the month-stem gate is read once per document, on the raw text: no
+  repair makes or breaks a run of three ASCII letters;
+* ``^`` cannot match past 0, so the ``(^|\\s)``-led repairs (b)-(d)
+  ``match`` at 0 and then run a twin led by the whitespace class alone
+  (``jsws.WsLed``).
 """
 
 from __future__ import annotations
@@ -60,18 +74,51 @@ class DateMatch(NamedTuple):
 
 # --- month-name machinery ---------------------------------------------------
 
-# EN + ES month alternation, as in date_parser.js:29-33.
-_MONTHS_EN = (
-    r"Jan(?:uary|\.)?|Feb(?:ruary|\.)?|Mar(?:ch|\.)?|Apr(?:il|\.)?|May|"
-    r"Jun(?:e|\.)?|Jul(?:y|\.)?|Aug(?:ust|\.)?|Sep(?:tember|\.)?|"
-    r"Oct(?:ober|\.)?|Nov(?:ember|\.)?|Dec(?:ember|\.)?"
-)
-_MONTHS_ES = (
-    r"Ene(?:ro|\.)?|Feb(?:rero|\.)?|Mar(?:zo|\.)?|Abr(?:il|\.)?|"
-    r"May(?:o|\.)?|Jun(?:io|\.)?|Jul(?:io|\.)?|Ago(?:sto|\.)?|"
-    r"Sep(?:tiembre|\.)?|Oct(?:ubre|\.)?|Nov(?:iembre|\.)?|Dic(?:iembre|\.)?"
-)
-MONTH_NAME_REGEXP = _MONTHS_EN + "|" + _MONTHS_ES
+# EN + ES month names, as in date_parser.js:29-33: (stem, suffix) for
+# ``stem(?:suffix|\.)?``; EN "May" takes no suffix or period.
+_MONTHS_EN_STEMS = [
+    ("Jan", "uary"), ("Feb", "ruary"), ("Mar", "ch"), ("Apr", "il"),
+    ("May", None), ("Jun", "e"), ("Jul", "y"), ("Aug", "ust"),
+    ("Sep", "tember"), ("Oct", "ober"), ("Nov", "ember"), ("Dec", "ember"),
+]
+_MONTHS_ES_STEMS = [
+    ("Ene", "ro"), ("Feb", "rero"), ("Mar", "zo"), ("Abr", "il"),
+    ("May", "o"), ("Jun", "io"), ("Jul", "io"), ("Ago", "sto"),
+    ("Sep", "tiembre"), ("Oct", "ubre"), ("Nov", "iembre"), ("Dic", "iembre"),
+]
+
+
+def _month_alternation(*langs: list[tuple[str, str | None]]) -> str:
+    r"""The flat alternation ``Jan(?:uary|\.)?|Feb(?:ruary|\.)?|...``
+    over every language in order, regrouped so sre dispatches on the
+    first letter: alternatives sharing a stem are merged in language
+    order (EN before ES, so ``Mar(?:(?:ch|\.)?|(?:zo|\.)?)``), then
+    stems are grouped by first letter in order of appearance.  Both
+    steps only move an alternative past ones with a different stem,
+    which fail on the same input char even under IGNORECASE (distinct
+    ASCII letters never fold together), so the match — including which
+    branch wins — is the flat alternation's."""
+    by_stem: dict[str, list[str]] = {}
+    for lang in langs:
+        for stem, suffix in lang:
+            by_stem.setdefault(stem, []).append(
+                rf"(?:{suffix}|\.)?" if suffix else ""
+            )
+    by_letter: dict[str, list[str]] = {}
+    for stem, tails in by_stem.items():
+        tail = tails[0] if len(tails) == 1 else "(?:" + "|".join(tails) + ")"
+        by_letter.setdefault(stem[0], []).append(stem[1:] + tail)
+    # the lookahead is the branches' first letters, so a word that starts
+    # with none of them fails one class test, not one per branch
+    return "(?=[" + "".join(by_letter) + "])(?:" + "|".join(
+        head + (alts[0] if len(alts) == 1 else "(?:" + "|".join(alts) + ")")
+        for head, alts in by_letter.items()
+    ) + ")"
+
+
+_MONTHS_EN = _month_alternation(_MONTHS_EN_STEMS)
+_MONTHS_ES = _month_alternation(_MONTHS_ES_STEMS)
+MONTH_NAME_REGEXP = _month_alternation(_MONTHS_EN_STEMS, _MONTHS_ES_STEMS)
 
 _MONTH_NUM = {
     "jan": 1, "feb": 2, "mar": 3, "apr": 4, "may": 5, "jun": 6,
@@ -109,7 +156,7 @@ def _impute_year(y: int) -> int:
 # fire across a BOM where Python \s would not (found by
 # tools/diff_date_repair_oracle.py: 1506/25036 texts diverged before
 # this class; 0 after).  The class itself is shared: parsers/jsws.py.
-from .jsws import JS_WS as _JS_WS  # noqa: E402
+from .jsws import JS_WS as _JS_WS, WsLed  # noqa: E402
 
 # (a) incorrectly scanned hyphens: unicode dashes AND forward slash → '-'
 #     (the '/' inside the JS char class at date_parser.js:38 is literal).
@@ -117,32 +164,32 @@ _RE_HYPHENS = re.compile("[–—‒﹘/]")
 
 # (b) dd?mm?yyyy with 1-2 junk separator chars → dd/mm/yyyy.
 #     [^a-z0-9] under JS 'i' excludes both cases → [^a-zA-Z0-9].
-_RE_NUMERIC_JUNK = re.compile(
-    rf"(^|[{_JS_WS}])"
+_RE_NUMERIC_JUNK = WsLed.compile(
     r"(?:([0-3]{0,1}[0-9])[^a-zA-Z0-9]{1,2})"
     r"(?:([0-3]{0,1}[0-9])[^a-zA-Z0-9]{1,2})"
     r"([1-9][0-9]{3})"
-    rf"(?=\Z|[{_JS_WS}])"
+    rf"(?=\Z|[{_JS_WS}])",
+    capture=True,
 )
 
 # (c) MMMdd yyyy → MMM dd yyyy
-_RE_MONTH_FIRST_JUNK = re.compile(
-    rf"(^|[{_JS_WS}])"
+_RE_MONTH_FIRST_JUNK = WsLed.compile(
     r"(?:(" + MONTH_NAME_REGEXP + r")[^a-zA-Z0-9]{0,2})"
     r"(?:([0-3]{0,1}[0-9])[^a-zA-Z0-9]{1,2})"
     r"([1-9][0-9]{3})"
     rf"(?=\Z|[{_JS_WS}])",
     re.IGNORECASE,
+    capture=True,
 )
 
 # (d) ddMMM yyyy → dd MMM yyyy
-_RE_DAY_FIRST_JUNK = re.compile(
-    rf"(^|[{_JS_WS}])"
+_RE_DAY_FIRST_JUNK = WsLed.compile(
     r"(?:([0-3]{0,1}[0-9])[^a-zA-Z0-9]{1,2})"
     r"(?:(" + MONTH_NAME_REGEXP + r")[^a-zA-Z0-9]{1,2})"
     r"([1-9][0-9]{3})"
     rf"(?=\Z|[{_JS_WS}])",
     re.IGNORECASE,
+    capture=True,
 )
 
 # (e) Thh;ii;ss → Thh:ii:ss (T matched case-insensitively, emitted as 'T').
@@ -156,30 +203,43 @@ _RE_TIME_JUNK = re.compile(
 )
 
 
-# Three-letter stems that every branch of the month alternations starts
-# with (case-insensitive).  A text containing NO stem cannot match any
-# month-name pattern, so the expensive alternation scans are skipped —
-# a pure optimization: substring presence is necessary for a match, and
-# repairs (a)/(b)/(e) never add or remove letters.
+# Three-letter stems (lower case) that the month alternations start
+# with.  The month-name repairs and grammars run only when
+# ``text.lower()`` holds a stem: EN stems gate the EN grammars, any stem
+# gates the ES grammar and the repairs.  The gate is part of the pinned
+# behaviour, not only a shortcut: sre's IGNORECASE folds U+017F into
+# ``s`` and U+0130/U+0131 into ``i``, ``str.lower()`` does not, so a
+# text whose only month is spelled with them gets no month-name match.
 _STEMS_EN = ("jan", "feb", "mar", "apr", "may", "jun",
              "jul", "aug", "sep", "oct", "nov", "dec")
 _STEMS_ES_ONLY = ("ene", "abr", "ago", "dic")
 
 
-def _has_stem(low: str, stems: tuple[str, ...]) -> bool:
-    return any(s in low for s in stems)
+def _month_gates(text: str) -> tuple[bool, bool]:
+    """(EN stem present, any stem present), on the raw text.  The
+    repairs never change it, as no run of three ASCII letters in
+    ``text.lower()`` is made or broken: (a) swaps one non-letter for
+    another; (b) and (e) rewrite only chars between digits (and ``t``
+    to ``T``); (c) and (d) rewrite only chars next to a digit, and their
+    ``[^a-zA-Z0-9]`` under IGNORECASE holds no char that lowers to an
+    ASCII letter."""
+    low = text.lower()
+    en = any(s in low for s in _STEMS_EN)
+    return en, en or any(s in low for s in _STEMS_ES_ONLY)
+
+
+def _prepare(text: str, any_stem: bool) -> str:
+    text = _RE_HYPHENS.sub("-", text)
+    text = _RE_NUMERIC_JUNK.sub(r"\1\2/\3/\4", text)
+    if any_stem:
+        text = _RE_MONTH_FIRST_JUNK.sub(r"\1\2 \3 \4", text)
+        text = _RE_DAY_FIRST_JUNK.sub(r"\1\2 \3 \4", text)
+    return _RE_TIME_JUNK.sub(r"T\1:\2:\3", text)
 
 
 def prepare_text(text: str) -> str:
     """OCR-noise repair chain, in reference source order (date_parser.js:36-91)."""
-    text = _RE_HYPHENS.sub("-", text)
-    text = _RE_NUMERIC_JUNK.sub(r"\1\2/\3/\4", text)
-    low = text.lower()
-    if _has_stem(low, _STEMS_EN) or _has_stem(low, _STEMS_ES_ONLY):
-        text = _RE_MONTH_FIRST_JUNK.sub(r"\1\2 \3 \4", text)
-        text = _RE_DAY_FIRST_JUNK.sub(r"\1\2 \3 \4", text)
-    text = _RE_TIME_JUNK.sub(r"T\1:\2:\3", text)
-    return text
+    return _prepare(text, _month_gates(text)[1])
 
 
 # --- the six-parser grammar ---------------------------------------------------
@@ -307,19 +367,18 @@ _PARSERS = (
 
 def all_dates(text: str) -> list[DateMatch]:
     """Scan with all six parsers; results sorted by (index, parser order),
-    mirroring chrono's index sort (stable across parsers).
+    mirroring chrono's index sort (stable across parsers)."""
+    return _all_dates(text, *_month_gates(text))
 
-    Month-name parsers (orders 3-5) are skipped when the text lacks
-    every month stem — pattern-necessary substrings, see _STEMS_* —
-    which drops three alternation scans on all-numeric texts."""
-    low = text.lower()
-    en = _has_stem(low, _STEMS_EN)
-    es = en or _has_stem(low, _STEMS_ES_ONLY)
+
+def _all_dates(text: str, en: bool, any_stem: bool) -> list[DateMatch]:
+    """Month-name parsers (orders 3-5) run only past the stem gates
+    (_STEMS_*)."""
     found: list[tuple[int, int, DateMatch]] = []
     for order, (pat, extract) in enumerate(_PARSERS):
         if order in (3, 4) and not en:
             continue
-        if order == 5 and not es:
+        if order == 5 and not any_stem:
             continue
         for m in pat.finditer(text):
             ymd = extract(m)
@@ -360,8 +419,8 @@ def parse_date(text: str, config: dict | None = None) -> dict:
     extractor = config.get("parser", "earliest")
     if isinstance(extractor, str):
         extractor = EXTRACTORS[extractor]
-    text = prepare_text(text)
-    matches = all_dates(text)
+    gates = _month_gates(text)
+    matches = _all_dates(_prepare(text, gates[1]), *gates)
     actual = extractor(matches)
     return {
         "matches": matches,

@@ -15,10 +15,54 @@ both showed real divergences on BOM/NEL-adjacent text before the fix
 and 0 mismatches after.
 
 Use inside a character class: ``rf"(^|[{JS_WS}])"``.
+
+``WsLed`` compiles a ``(^|\\s)``-led pattern of either parser with a
+twin led by the whitespace class alone, which sre can seek with its
+charset search.
 """
+
+from __future__ import annotations
+
+import re
+from typing import NamedTuple
 
 JS_WS = (
     "\t\n\x0b\x0c\r \xa0 "
     " - "  # contiguous range — valid inside a [...] class
     "    　﻿"
 )
+
+
+class WsLed(NamedTuple):
+    """A pattern opening with the reference's ``(^|\\s)`` boundary.
+    ``pat`` keeps the boundary; ``twin`` opens with the whitespace class
+    alone.  Past position 0 ``^`` cannot match, so there the two match
+    alike, and only the twin lets sre skip from one whitespace char to
+    the next (a leading alternation defeats its charset search).  The
+    body must not look behind, so the twin may also run on a suffix."""
+
+    pat: re.Pattern[str]
+    twin: re.Pattern[str]
+
+    @classmethod
+    def compile(cls, body: str, flags: int = 0, capture: bool = False) -> WsLed:
+        """``capture`` makes the boundary group 1, for ``\\1`` in a
+        replacement."""
+        o = "(" if capture else "(?:"
+        return cls(
+            re.compile(rf"{o}^|[{JS_WS}])" + body, flags),
+            re.compile(rf"{o}[{JS_WS}])" + body, flags),
+        )
+
+    def finditer(self, text: str) -> list[re.Match[str]]:
+        first = self.pat.match(text)
+        found = [first] if first else []
+        found.extend(self.twin.finditer(text, first.end() if first else 1))
+        return found
+
+    def sub(self, repl: str, text: str) -> str:
+        first = self.pat.match(text)
+        if first is None:
+            return self.twin.sub(repl, text)
+        return first.expand(repl) + self.twin.sub(repl, text[first.end():])
+
