@@ -740,7 +740,7 @@ def decode_pnm(data: bytes) -> np.ndarray:
     kind = data[1] - 0x30
     pos = 2
 
-    def token() -> int:
+    def token(max_digits: int | None = None) -> int:
         nonlocal pos
         while pos < len(data):
             c = data[pos]
@@ -752,7 +752,8 @@ def decode_pnm(data: bytes) -> np.ndarray:
             else:
                 break
         start = pos
-        while pos < len(data) and data[pos] in b"0123456789":
+        stop = len(data) if max_digits is None else min(len(data), pos + max_digits)
+        while pos < stop and data[pos] in b"0123456789":
             pos += 1
         if pos == start:
             raise ValueError("bad PNM header token")
@@ -769,9 +770,12 @@ def decode_pnm(data: bytes) -> np.ndarray:
     nch = 3 if kind in (3, 6) else 1
 
     if kind in (1, 2, 3):  # ASCII
+        # plain PBM pixels are single '0'/'1' chars that need no
+        # separator ('0110' is four pixels); P2/P3 samples are tokens
+        digits = 1 if kind == 1 else None
         vals = np.empty(w * h * nch, dtype=np.uint32)
         for i in range(vals.size):
-            vals[i] = token()
+            vals[i] = token(digits)
     else:
         pos += 1  # exactly one whitespace byte after the header
         if kind == 4:

@@ -1325,6 +1325,15 @@ class TestPnm:
         b = decode_pnm(b"P5\n5 3\n255\n" + px.tobytes())
         np.testing.assert_array_equal(a, b)
 
+    def test_p1_unseparated_pixels(self):
+        # plain PBM needs no whitespace between pixels; comments and
+        # line breaks may still fall anywhere between them
+        want = np.array([[255, 0, 0, 255], [0, 255, 255, 0]], np.uint8)
+        for body in (b"0110\n1001\n", b"0 1 1 0 1 0 0 1", b"01\n# c\n1010\n01"):
+            np.testing.assert_array_equal(decode_pnm(b"P1\n4 2\n" + body), want)
+        with pytest.raises(ValueError, match="maxval"):
+            decode_pnm(b"P1\n2 1\n02\n")
+
     def test_16bit_maxval_scales(self):
         px16 = np.array([[0, 32767, 65535]], dtype=">u2")
         data = b"P5\n3 1\n65535\n" + px16.tobytes()
