@@ -24,8 +24,10 @@ import tempfile
 
 sys.path.insert(0, ".")
 
+REFERENCE_MODULE = "/root/reference/lib/text_parser/amount_parser.js"
+
 NODE_SNIPPET = """
-const amountParser = require('/root/reference/lib/text_parser/amount_parser');
+const amountParser = require(process.argv[3]);
 const texts = JSON.parse(require('fs').readFileSync(process.argv[2], 'utf8'));
 const out = texts.map(t => {
   const r = amountParser.parser(t);
@@ -75,6 +77,11 @@ def gen_texts(n: int, seed: int = 20260816) -> list[str]:
 
 
 def main() -> None:
+    if not os.path.isfile(REFERENCE_MODULE):
+        print(f"reference absent: {REFERENCE_MODULE} not found, so this "
+              "differential cannot run; tests/test_parser_golden.py holds "
+              "the parser outputs it last verified", file=sys.stderr)
+        sys.exit(2)
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 3000
     from receipt_scanner_spark.parsers.amount import parse_amount
 
@@ -87,7 +94,8 @@ def main() -> None:
         js_path = f.name
     try:
         oracle = json.loads(
-            subprocess.run(["node", js_path, texts_path], capture_output=True,
+            subprocess.run(["node", js_path, texts_path, REFERENCE_MODULE],
+                           capture_output=True,
                            check=True, text=True).stdout
         )
     finally:

@@ -1,4 +1,4 @@
-"""Differential oracle for the date REPAIR stage: our
+r"""Differential oracle for the date REPAIR stage: our
 ``parsers.date.prepare_text`` vs the ACTUAL reference ``prepareText``
 (date_parser.js:34-91).
 
@@ -35,8 +35,10 @@ import tempfile
 
 sys.path.insert(0, ".")
 
+REFERENCE_MODULE = "/root/reference/lib/text_parser/date_parser.js"
+
 NODE_SNIPPET = """
-const dp = require('/root/reference/lib/text_parser/date_parser');
+const dp = require(process.argv[3]);
 const texts = JSON.parse(require('fs').readFileSync(process.argv[2], 'utf8'));
 process.stdout.write(JSON.stringify(texts.map(t => dp.prepareText(t))));
 """
@@ -134,6 +136,11 @@ def corpus_texts(n_rows: int = 2000) -> list[str]:
 
 
 def main() -> None:
+    if not os.path.isfile(REFERENCE_MODULE):
+        print(f"reference absent: {REFERENCE_MODULE} not found, so this "
+              "differential cannot run; tests/test_parser_golden.py holds "
+              "the parser outputs it last verified", file=sys.stderr)
+        sys.exit(2)
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 25_000
     from receipt_scanner_spark.parsers.date import prepare_text
 
@@ -148,7 +155,8 @@ def main() -> None:
         js_path = f.name
     try:
         oracle = json.loads(
-            subprocess.run(["node", js_path, texts_path], capture_output=True,
+            subprocess.run(["node", js_path, texts_path, REFERENCE_MODULE],
+                           capture_output=True,
                            check=True, text=True).stdout
         )
     finally:
