@@ -128,8 +128,12 @@ _MONTH_NUM = {
 }
 
 
-def _month_num(name: str) -> int:
-    return _MONTH_NUM[name[:3].lower()]
+def _month_num(name: str) -> int | None:
+    """None for a name the IGNORECASE grammar matched only through sre's
+    folding of U+017F (to s) or U+0130/U+0131 (to i): ``str.lower()``
+    keeps those, and the reference's non-unicode JS regexes never match
+    them."""
+    return _MONTH_NUM.get(name[:3].lower())
 
 
 def js_date(year: int, month: int, day: int) -> _dt.date:
@@ -207,9 +211,10 @@ _RE_TIME_JUNK = re.compile(
 # with.  The month-name repairs and grammars run only when
 # ``text.lower()`` holds a stem: EN stems gate the EN grammars, any stem
 # gates the ES grammar and the repairs.  The gate is part of the pinned
-# behaviour, not only a shortcut: sre's IGNORECASE folds U+017F into
-# ``s`` and U+0130/U+0131 into ``i``, ``str.lower()`` does not, so a
-# text whose only month is spelled with them gets no month-name match.
+# behaviour: sre's IGNORECASE folds U+017F/U+0130/U+0131 into ASCII
+# letters and ``str.lower()`` does not, so a month name spelled with
+# them is repaired only when the text holds a stem elsewhere (it never
+# yields a date, see _month_num).
 _STEMS_EN = ("jan", "feb", "mar", "apr", "may", "jun",
              "jul", "aug", "sep", "oct", "nov", "dec")
 _STEMS_ES_ONLY = ("ene", "abr", "ago", "dic")
@@ -342,7 +347,7 @@ def _extract_slash_year_first(m: re.Match) -> tuple[int, int, int] | None:
 def _extract_middle(m: re.Match) -> tuple[int, int, int] | None:
     mo = _month_num(m.group(1))
     d = int(m.group(2))
-    if d < 1 or d > 31:
+    if mo is None or d < 1 or d > 31:
         return None
     return (_impute_year(int(m.group(3))), mo, d)
 
@@ -350,7 +355,7 @@ def _extract_middle(m: re.Match) -> tuple[int, int, int] | None:
 def _extract_little(m: re.Match) -> tuple[int, int, int] | None:
     d = int(m.group(1))
     mo = _month_num(m.group(2))
-    if d < 1 or d > 31:
+    if mo is None or d < 1 or d > 31:
         return None
     return (_impute_year(int(m.group(3))), mo, d)
 

@@ -36,3 +36,18 @@ def test_parser_matches_frozen_corpus(golden, corpus, parser):
                 lo = i * parser_golden.CHUNK
                 failed.append(f"{name} texts {lo}-{min(lo + parser_golden.CHUNK, len(texts)) - 1}")
     assert not failed, f"{parser} output changed in: {', '.join(failed)}"
+
+
+@pytest.mark.parametrize("text", [
+    "\u017fep 5 2016 mar",  # long s folds to 's' only inside sre
+    "5 D\u0131c 2016 ene",  # dotless i
+    "5 D\u0130c 2016 ene",  # dotted capital I
+])
+def test_month_name_matched_only_by_sre_folding_yields_no_date(text):
+    """The IGNORECASE grammar matches these month names while
+    ``str.lower()`` maps them to no month (the reference's JS regexes
+    do not match them at all): they must give no date, not a KeyError."""
+    from receipt_scanner_spark.parsers.date import parse_date
+
+    r = parse_date(text)
+    assert r["match"] is None and r["matches"] == []
