@@ -9,13 +9,10 @@ calls*, per BASELINE.json input_hint — the per-row work is regex/DOM
 parsing that is irreducibly row-wise, batched through one vectorized
 call).
 
-Two fusion levels:
-
-* ``extract_udf`` / ``parse_udf`` — composable stages (format sniff +
-  text extraction; parser cascade).
-* ``process_udf`` — fused extract+parse, ONE Arrow round-trip per
-  batch.  The default pipeline uses this: two chained pandas UDFs cost
-  two JVM↔Python exchanges in the same stage, fusing halves transfer.
+One UDF, ``process_udf``: extract and parse fused, ONE Arrow round-trip
+per batch (two chained pandas UDFs would cost two JVM↔Python exchanges
+in the same stage).  ``extract_row`` and ``parse_row`` are its row
+kernels.
 
 Custom parsers (reference plug-in surface T17, lib/processor.js:86-90)
 are supported by building a UDF from an explicit parser list via
@@ -78,7 +75,7 @@ PARSE_SCHEMA = StructType(
 PROCESS_SCHEMA = StructType(EXTRACT_SCHEMA.fields + PARSE_SCHEMA.fields)
 
 
-# --- row kernels (pure, shared by all fusion levels) -------------------------
+# --- row kernels (pure) ------------------------------------------------------
 
 def extract_row(
     html: bytes | None,
@@ -219,28 +216,7 @@ def parse_row(
     return amount_val, date_val, spans, (extra or None)
 
 
-# --- UDF builders -------------------------------------------------------------
-
-def build_extract_udf(ocr: Callable | None = None, ocr_arrays: Callable | None = None):
-    @pandas_udf(EXTRACT_SCHEMA)
-    def extract(html: pd.Series, text: pd.Series) -> pd.DataFrame:
-        rows = [
-            extract_row(h, t, ocr, ocr_arrays=ocr_arrays)
-            for h, t in zip(html, text)
-        ]
-        return pd.DataFrame(rows, columns=["format", "extracted_text", "error"])
-
-    return extract
-
-
-def build_parse_udf(parsers: list | None = None):
-    @pandas_udf(PARSE_SCHEMA)
-    def parse(text: pd.Series) -> pd.DataFrame:
-        rows = [parse_row(t, parsers) for t in text]
-        return pd.DataFrame(rows, columns=["amount", "date", "spans", "extra"])
-
-    return parse
-
+# --- UDF builder -------------------------------------------------------------
 
 def build_process_udf(
     parsers: list | None = None,
@@ -278,7 +254,5 @@ def build_process_udf(
     return process
 
 
-# Default instances (module-level so Spark serializes one closure).
-extract_udf = build_extract_udf()
-parse_udf = build_parse_udf()
+# Default instance (module-level so Spark serializes one closure).
 process_udf = build_process_udf()
