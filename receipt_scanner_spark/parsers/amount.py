@@ -42,7 +42,7 @@ from __future__ import annotations
 
 import math
 import re
-from typing import Iterator, NamedTuple
+from typing import NamedTuple
 
 
 class AmountMatch(NamedTuple):
@@ -102,7 +102,7 @@ def _trie(words: list[str]) -> str:
 
 _CURRENCY_CODES = _trie(_ISO_CODES)
 
-from .jsws import JS_WS as _JS_WS, WsLed
+from .jsws import JS_WS as _JS_WS, WsLed, finditer_at
 
 _FLOAT_PREFIX = re.compile(r"^[+-]?(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?")
 
@@ -232,19 +232,6 @@ def _total_starts(text: str, prepend: str) -> list[int] | None:
     return [max(m.start() - 1, 0) for m in _TOTAL_KEYWORD.finditer(text)]
 
 
-def _finditer_at(
-    pat: re.Pattern[str], text: str, starts: list[int]
-) -> Iterator[re.Match[str]]:
-    """``pat.finditer(text)`` when no match can begin outside ``starts``
-    (ascending): ``pat.match`` at each start at or past the previous
-    match's end, as finditer resumes there."""
-    end = 0
-    for s in starts:
-        if s >= end and (m := pat.match(text, s)):
-            yield m
-            end = m.end()
-
-
 def _scan(
     text: str, decimal: str, thousand: str, prepend: str, starts: list[int] | None
 ) -> list[AmountMatch]:
@@ -254,7 +241,7 @@ def _scan(
         method = regexp_builder(decimal, thousand, prepend)
         found = (
             method.finditer(text) if starts is None
-            else _finditer_at(method.pat, text, starts)
+            else finditer_at(method.pat, text, starts)
         )
         for m in found:
             raw = m.group(2)

@@ -160,7 +160,7 @@ def _impute_year(y: int) -> int:
 # fire across a BOM where Python \s would not (found by
 # tools/diff_date_repair_oracle.py: 1506/25036 texts diverged before
 # this class; 0 after).  The class itself is shared: parsers/jsws.py.
-from .jsws import JS_WS as _JS_WS, WsLed  # noqa: E402
+from .jsws import JS_WS as _JS_WS, WsLed, finditer_at  # noqa: E402
 
 # (a) incorrectly scanned hyphens: unicode dashes AND forward slash → '-'
 #     (the '/' inside the JS char class at date_parser.js:38 is literal).
@@ -370,6 +370,16 @@ _PARSERS = (
 )
 
 
+# Every match of a grammar but _P_MIDDLE starts at a run of ASCII digits
+# with no word char before it, and the run's length is fixed: 4 for the
+# year-led _P_ISO and _P_SLASH_YEAR_FIRST (a separator follows the
+# year), 1 or 2 for the rest (a non-digit follows the day or month).
+# One scan, led by the digit class so sre seeks it with its charset
+# search, finds the runs; each grammar is matched only at its own.
+_DIGIT_RUN = re.compile(r"[0-9](?<!\w[0-9])[0-9]*")
+_YEAR_LED = (_P_ISO, _P_SLASH_YEAR_FIRST)
+
+
 def all_dates(text: str) -> list[DateMatch]:
     """Scan with all six parsers; results sorted by (index, parser order),
     mirroring chrono's index sort (stable across parsers)."""
@@ -378,14 +388,26 @@ def all_dates(text: str) -> list[DateMatch]:
 
 def _all_dates(text: str, en: bool, any_stem: bool) -> list[DateMatch]:
     """Month-name parsers (orders 3-5) run only past the stem gates
-    (_STEMS_*)."""
+    (_STEMS_*); the others only at their _DIGIT_RUN starts."""
+    years: list[int] = []
+    days: list[int] = []
+    for run in _DIGIT_RUN.finditer(text):
+        n = run.end() - run.start()
+        if n == 4:
+            years.append(run.start())
+        elif n <= 2:
+            days.append(run.start())
     found: list[tuple[int, int, DateMatch]] = []
     for order, (pat, extract) in enumerate(_PARSERS):
         if order in (3, 4) and not en:
             continue
         if order == 5 and not any_stem:
             continue
-        for m in pat.finditer(text):
+        if pat is _P_MIDDLE:
+            matches = pat.finditer(text)
+        else:
+            matches = finditer_at(pat, text, years if pat in _YEAR_LED else days)
+        for m in matches:
             ymd = extract(m)
             if ymd is None:
                 continue

@@ -16,15 +16,17 @@ and 0 mismatches after.
 
 Use inside a character class: ``rf"(^|[{JS_WS}])"``.
 
-``WsLed`` compiles a ``(^|\\s)``-led pattern of either parser with a
-twin led by the whitespace class alone, which sre can seek with its
-charset search.
+Scanning helpers shared by the amount and date parsers:
+
+* ``WsLed`` compiles a ``(^|\\s)``-led pattern with a twin led by the
+  whitespace class alone, which sre can seek with its charset search;
+* ``finditer_at`` runs ``finditer``'s scan only where a match can start.
 """
 
 from __future__ import annotations
 
 import re
-from typing import NamedTuple
+from typing import Iterator, NamedTuple
 
 JS_WS = (
     "\t\n\x0b\x0c\r \xa0 "
@@ -66,3 +68,15 @@ class WsLed(NamedTuple):
             return self.twin.sub(repl, text)
         return first.expand(repl) + self.twin.sub(repl, text[first.end():])
 
+
+def finditer_at(
+    pat: re.Pattern[str], text: str, starts: list[int]
+) -> Iterator[re.Match[str]]:
+    """``pat.finditer(text)`` when no match can begin outside ``starts``
+    (ascending): ``pat.match`` at each start at or past the previous
+    match's end, as finditer resumes there."""
+    end = 0
+    for s in starts:
+        if s >= end and (m := pat.match(text, s)):
+            yield m
+            end = m.end()
