@@ -54,6 +54,9 @@ tests/test_parser_golden.py):
   first-letter lookahead rejects other words before the branches;
 * the month-stem gate is read once per document, on the raw text: no
   repair makes or breaks a run of three ASCII letters;
+* a match of any grammar but _P_MIDDLE starts at a run of ASCII digits
+  with no word char before it, 4 digits long for the year-led grammars
+  and 1 or 2 for the others, so those grammars are matched only there;
 * ``^`` cannot match past 0, so the ``(^|\\s)``-led repairs (b)-(d)
   ``match`` at 0 and then run a twin led by the whitespace class alone
   (``jsws.WsLed``).
