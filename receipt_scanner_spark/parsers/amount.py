@@ -137,7 +137,7 @@ def _fractional_regexp(decimal: str, thousand: str, prepend: str) -> WsLed:
     method = _FRACTIONAL_CACHE.get(key)
     if method is None:
         d, t = re.escape(decimal), re.escape(thousand)
-        method = WsLed.compile(
+        method = WsLed(
             prepend
             + _currency(decimal) + "?"
             # amount group: (x)x(,xxx)* | x(xxx..) | 0 | <empty>, then .d{1,2}
@@ -157,7 +157,7 @@ def _whole_regexp(decimal: str, thousand: str, prepend: str) -> WsLed:
     method = _WHOLE_CACHE.get(key)
     if method is None:
         t = re.escape(thousand)
-        method = WsLed.compile(
+        method = WsLed(
             prepend
             + _currency(decimal)  # currency REQUIRED
             + "((?:[1-9][0-9]{0,2}(?:" + t + "[0-9]{3})*)"

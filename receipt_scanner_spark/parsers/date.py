@@ -171,7 +171,7 @@ _RE_HYPHENS = re.compile("[–—‒﹘/]")
 
 # (b) dd?mm?yyyy with 1-2 junk separator chars → dd/mm/yyyy.
 #     [^a-z0-9] under JS 'i' excludes both cases → [^a-zA-Z0-9].
-_RE_NUMERIC_JUNK = WsLed.compile(
+_RE_NUMERIC_JUNK = WsLed(
     r"(?:([0-3]{0,1}[0-9])[^a-zA-Z0-9]{1,2})"
     r"(?:([0-3]{0,1}[0-9])[^a-zA-Z0-9]{1,2})"
     r"([1-9][0-9]{3})"
@@ -180,7 +180,7 @@ _RE_NUMERIC_JUNK = WsLed.compile(
 )
 
 # (c) MMMdd yyyy → MMM dd yyyy
-_RE_MONTH_FIRST_JUNK = WsLed.compile(
+_RE_MONTH_FIRST_JUNK = WsLed(
     r"(?:(" + MONTH_NAME_REGEXP + r")[^a-zA-Z0-9]{0,2})"
     r"(?:([0-3]{0,1}[0-9])[^a-zA-Z0-9]{1,2})"
     r"([1-9][0-9]{3})"
@@ -190,7 +190,7 @@ _RE_MONTH_FIRST_JUNK = WsLed.compile(
 )
 
 # (d) ddMMM yyyy → dd MMM yyyy
-_RE_DAY_FIRST_JUNK = WsLed.compile(
+_RE_DAY_FIRST_JUNK = WsLed(
     r"(?:([0-3]{0,1}[0-9])[^a-zA-Z0-9]{1,2})"
     r"(?:(" + MONTH_NAME_REGEXP + r")[^a-zA-Z0-9]{1,2})"
     r"([1-9][0-9]{3})"

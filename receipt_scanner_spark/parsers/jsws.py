@@ -26,7 +26,8 @@ Scanning helpers shared by the amount and date parsers:
 from __future__ import annotations
 
 import re
-from typing import Iterator, NamedTuple
+from functools import cached_property
+from typing import Iterator
 
 JS_WS = (
     "\t\n\x0b\x0c\r \xa0 "
@@ -35,26 +36,26 @@ JS_WS = (
 )
 
 
-class WsLed(NamedTuple):
+class WsLed:
     """A pattern opening with the reference's ``(^|\\s)`` boundary.
     ``pat`` keeps the boundary; ``twin`` opens with the whitespace class
     alone.  Past position 0 ``^`` cannot match, so there the two match
     alike, and only the twin lets sre skip from one whitespace char to
     the next (a leading alternation defeats its charset search).  The
-    body must not look behind, so the twin may also run on a suffix."""
+    body must not look behind, so the twin may also run on a suffix.
+    ``capture`` makes the boundary group 1, for ``\\1`` in a
+    replacement."""
 
-    pat: re.Pattern[str]
-    twin: re.Pattern[str]
-
-    @classmethod
-    def compile(cls, body: str, flags: int = 0, capture: bool = False) -> WsLed:
-        """``capture`` makes the boundary group 1, for ``\\1`` in a
-        replacement."""
+    def __init__(self, body: str, flags: int = 0, capture: bool = False):
         o = "(" if capture else "(?:"
-        return cls(
-            re.compile(rf"{o}^|[{JS_WS}])" + body, flags),
-            re.compile(rf"{o}[{JS_WS}])" + body, flags),
-        )
+        self.pat = re.compile(rf"{o}^|[{JS_WS}])" + body, flags)
+        self._twin_source = (rf"{o}[{JS_WS}])" + body, flags)
+
+    @cached_property
+    def twin(self) -> re.Pattern[str]:
+        # compiled on first use: the keyword-anchored amount scans only
+        # ever ``match`` with ``pat``
+        return re.compile(*self._twin_source)
 
     def finditer(self, text: str) -> list[re.Match[str]]:
         first = self.pat.match(text)
