@@ -40,7 +40,7 @@ from ..extract.html_fast import extract_main_text_fast as extract_main_text
 from ..extract.pdf import OCR_UNAVAILABLE_ERROR, process_pdf
 from ..extract.sniff import maybe_gunzip, sniff_format, unsupported_error
 from ..parsers.amount import parse_amount
-from ..parsers.date import parse_date, prepare_text as prepare_date_text
+from ..parsers.date import parse_date
 from ..parsers.registry import PARSERS
 
 SPAN_TYPE = StructType(

@@ -88,7 +88,7 @@ _ISO_CODES = [
 
 def _trie(words: list[str]) -> str:
     """Alternation of distinct equal-length literals as a prefix trie:
-    ``AED|AFN|AFX|BAM`` → ``(?:A(?:ED|F[NX])|BAM)``.  Equal length and
+    ``AED|AFN|AFX|BAM`` → ``(?:A(?:ED|F[NX])|B(?:AM))``.  Equal length and
     distinctness mean at most one word matches at a position, so the
     match set is the flat alternation's; sre tests one leading letter
     per candidate position instead of trying every branch."""

@@ -34,7 +34,8 @@ def test_parser_matches_frozen_corpus(golden, corpus, parser):
         for i, (g, want) in enumerate(zip(got, src[parser])):
             if g != want:
                 lo = i * parser_golden.CHUNK
-                failed.append(f"{name} texts {lo}-{min(lo + parser_golden.CHUNK, len(texts)) - 1}")
+                hi = min(lo + parser_golden.CHUNK, len(texts)) - 1
+                failed.append(f"{name} texts {lo}-{hi}")
     assert not failed, f"{parser} output changed in: {', '.join(failed)}"
 
 
